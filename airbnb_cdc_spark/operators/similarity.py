@@ -104,7 +104,7 @@ def _rank_topk_score8(scored: DataFrame, k: int) -> DataFrame:
     so the in-session variants (sq8_topk, ivf_sq8_topk) and the store
     queries (query_sq8_index, query_ivf_sq8_index) can never
     desynchronize their tie-break or k semantics — the bit-exact
-    replay contract the store rehearsals pin."""
+    replay contract tests/test_registry_oracles.py checks."""
     from pyspark.sql import Window
 
     w = Window.partitionBy("query_id").orderBy(
@@ -479,9 +479,15 @@ def _check_collected_dims(pairs, size_col: str, dim: int, vec_col: str) -> None:
     collect instead of a separate 2-job aggregate action (r18): every
     query row contributes its top-nprobe probe rows, so the collected
     ``size(vec)`` column covers the whole query frame — same fail-loud
-    ValueError, two fewer driver jobs per run. An empty query frame
-    passes, exactly like the aggregate form."""
+    ValueError, two fewer driver jobs per run. A NULL query vector
+    (``size`` is NULL, or -1 under legacy ``sizeOfNull``) raises a
+    ValueError naming its ``query_id``. An empty probe set — no query
+    rows, or a store with no lists to probe — skips the guard: there
+    is no collected width to check."""
     sizes = {r[size_col] for r in pairs}
+    if sizes & {None, -1}:
+        bad = [r["query_id"] for r in pairs if r[size_col] in (None, -1)]
+        raise ValueError(f"{vec_col!r} is NULL for query_id {bad[:5]}")
     if sizes and sizes != {dim}:
         raise ValueError(
             f"hyperplane dim={dim} but {vec_col!r} vectors have "
@@ -1031,8 +1037,8 @@ def _seed_centroids(
     definition shared by the in-session variants (ivf_topk,
     ivf_sq8_topk) and every store build (IVF, IVF-SQ8, IVF-PQ), so the
     centroid rule and its empty-residue fail-fast can never
-    desynchronize between the forms the store rehearsals pin
-    bit-exact. The fail-fast probes the RAW frame with only the id
+    desynchronize between the forms tests/test_registry_oracles.py
+    checks bit-exact. The fail-fast probes the RAW frame with only the id
     column selected — column pruning + CollectLimit stop at the first
     match (measured ~0.16s/call cheaper than probing the quantized
     frame at sf0.1); an in-plan raise_error is NOT an option because
@@ -1459,8 +1465,8 @@ def build_ivf_sq8_index(
 
     Same deterministic centroid rule and integer scoring as
     ``ivf_sq8_topk``, so the store replays it bit-exactly
-    (rehearsal-pinned in tests/test_ivf_sq8_store_relead_rehearsal.py
-    against the `ann_topk_ivf_sq8` DuckDB oracle)."""
+    (checked in tests/test_registry_oracles.py against the
+    `ann_topk_ivf_sq8` DuckDB oracle)."""
     import os
 
     base = persist_tracked(_with_quant(corpus, id_col, vec_col))

@@ -45,7 +45,7 @@ def main() -> None:
             pass
         release_cached()
 
-    # Target-SF warm-up (r15 verdict #6): after every rotation-order
+    # Target-SF warm-up (r15 verdict #6): after every registry-order
     # change the first ~22 TIMED positions showed 1.2-1.6x phantom
     # movers — cold OS page cache for the target-SF parquet plus
     # first-at-SF executor memory growth, not code, and four rounds

@@ -1,57 +1,36 @@
-"""Local replica of the driver's t2 correctness gate.
+"""Check registry queries against their DuckDB oracles from the command line.
 
 Runs each ``queries()`` entry on Spark and its ``oracle_sql()`` on DuckDB
-at sf0.01 (override with $SPARK_GRAFT_VERIFY_SF_DIR), then compares row
-count, column names, and an order-insensitive value representation. Use
-while iterating:
+at sf0.01 (override with $SPARK_GRAFT_VERIFY_SF_DIR) and compares them
+with ``airbnb_cdc_spark.oracle_check.oracle_mismatches`` — the same
+comparator the default test tier runs over every query at sf0.001 and
+sf0.01 (``tests/test_registry_oracles.py``). Use while iterating:
 
     python scripts/verify_local.py [query_name ...]
     SPARK_GRAFT_VERIFY_SF_DIR=/root/testdata/sf0.001 python scripts/verify_local.py
 
-Float cells compare by bare ``repr`` — DELIBERATELY stricter than the
-differential tests' round-to-10-places: the repo's exact-decimal
-discipline promises bit-identical doubles, and the strict compare is
-what has caught real divergence (the r6 OLS-trend cancellation bug
-showed up only past the 7th digit).
+Exits 0 after printing ``all green``, 1 when any query fails, and 2 on
+an unknown query name.
 """
 
 from __future__ import annotations
 
-import math
 import os
 import sys
 import traceback
-from collections import Counter
 from pathlib import Path
-
-import duckdb
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
 import __spark_entry__ as e  # noqa: E402
-from airbnb_cdc_spark.session import TABLES, get_spark, release_cached  # noqa: E402
+from airbnb_cdc_spark.oracle_check import (  # noqa: E402
+    oracle_connection,
+    oracle_mismatches,
+)
+from airbnb_cdc_spark.session import get_spark, release_cached  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_VERIFY_SF_DIR", "/root/testdata/sf0.01")
-
-
-def _norm_cell(v):
-    if v is None:
-        return "NULL"
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return repr(v)
-    return str(v)
-
-
-def _normalize(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = []
-    for r in rows:
-        out.append(tuple(_norm_cell(r[i]) for i in order))
-    out.sort()
-    return [cols[i] for i in order], out
 
 
 def main() -> int:
@@ -64,11 +43,7 @@ def main() -> int:
         return 2
 
     spark = get_spark("verify_local")
-    con = duckdb.connect()
-    for t in TABLES:
-        p = f"{SF_DIR}/{t}.parquet"
-        if Path(p).exists():
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+    con = oracle_connection(SF_DIR)
 
     failed = []
     for name, fn in qs.items():
@@ -83,12 +58,9 @@ def main() -> int:
         except Exception:
             print(f"{name}: SPARK ERROR\n{traceback.format_exc(limit=3)}")
             failed.append(name)
+            continue
+        finally:
             release_cached()
-            continue
-        release_cached()
-        if name not in oracles:
-            print(f"{name}: rows-only check, {len(s_rows)} rows")
-            continue
         try:
             d = con.execute(oracles[name])
             d_cols = [c[0] for c in d.description]
@@ -98,33 +70,11 @@ def main() -> int:
             failed.append(name)
             continue
 
-        ok = True
-        if sorted(s_cols) != sorted(d_cols):
-            print(f"{name}: SCHEMA MISMATCH spark={sorted(s_cols)} duck={sorted(d_cols)}")
-            ok = False
-        if len(s_rows) != len(d_rows):
-            print(f"{name}: ROWCOUNT MISMATCH spark={len(s_rows)} duck={len(d_rows)}")
-            ok = False
-        if ok:
-            cols, sn = _normalize(s_rows, s_cols)
-            _, dn = _normalize(d_rows, d_cols)
-            if sn != dn:
-                ok = False
-                # multiset difference, NOT positional zip: one odd row
-                # shifts sorted order and would misalign every pair
-                # after it, reporting unrelated rows as different
-                s_only = Counter(sn) - Counter(dn)
-                d_only = Counter(dn) - Counter(sn)
-                for label, bag in (("spark-only", s_only), ("duck-only", d_only)):
-                    for row, cnt in list(bag.items())[:3]:
-                        print(f"{name}: {label} x{cnt}: {dict(zip(cols, row))}")
-                print(
-                    f"{name}: VALUE MISMATCH "
-                    f"({sum(s_only.values())} spark-only / "
-                    f"{sum(d_only.values())} duck-only of {len(sn)} rows)"
-                )
-        print(f"{name}: {'OK' if ok else 'FAIL'} ({len(s_rows)} rows)")
-        if not ok:
+        problems = oracle_mismatches(s_cols, s_rows, d_cols, d_rows)
+        for p in problems:
+            print(f"{name}: {p}")
+        print(f"{name}: {'FAIL' if problems else 'OK'} ({len(s_rows)} rows)")
+        if problems:
             failed.append(name)
     if failed:
         print("FAILED:", failed)

@@ -21,11 +21,14 @@ def spark():
 
 # The slow tier (see pytest.ini): modules measured >40 s — or
 # streaming/e2e by nature — in the r18 full-suite duration profile
-# (3160 s total; these thirteen carry 2575 s of it, leaving the
-# default tier at ~10 min). Centralized here so a future heavy module
-# is one line, not a per-file marker hunt.
+# (3160 s total; these thirteen carry 2575 s of it). The default tier,
+# which also runs every registry oracle at two SFs, took 994 s on a
+# 4-core VM. Centralized here so a future heavy module is one line,
+# not a per-file marker hunt.
 _SLOW_MODULES = {
-    "test_oracle_differential",  # 1681 s — driver's own gate covers it
+    "test_oracle_differential",  # 1681 s — randomized corpora; the
+                                 # fixed-SF oracles run in the default
+                                 # tier (test_registry_oracles)
     "test_scale_smoke",          # 524 s — 200k-row scale rehearsals
     "test_ivf_pq_index",         # 99 s — compaction-crash matrix
     "test_cdf",                  # 73 s — CDC e2e

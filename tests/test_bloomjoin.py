@@ -4,6 +4,7 @@ negatives — every true match passes the bitset — for any sizing, and
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from airbnb_cdc_spark.operators.bloomjoin import (
@@ -101,3 +102,18 @@ def test_bloom_auto_sized_semi_join_and_overcap_fallback(spark, monkeypatch):
     assert "element_at" not in plan
     auto_plan = auto._jdf.queryExecution().optimizedPlan().toString()
     assert "element_at" in auto_plan
+
+
+@pytest.mark.parametrize("dim_type", ["decimal(18,2)", "double"])
+def test_bloom_semi_join_bigint_fact_against_non_integral_dim(spark, dim_type):
+    """bigint fact keys against decimal/double dim keys: the semi-join's
+    type coercion matches 7 with 7.00 and 7.0, so the bloom must not
+    prune those rows first (their string forms '7', '7.00' and '7.0'
+    hash apart)."""
+    fact = spark.range(100).select(F.col("id").alias("k"))
+    dim = spark.range(0, 100, 10).select(F.col("id").cast(dim_type).alias("dk"))
+    want = {r.k for r in fact.join(dim, fact.k == dim.dk, "left_semi").collect()}
+    assert len(want) == 10
+    for bits in (None, 4096):
+        got = bloom_semi_join(fact, dim, "k", "dk", num_bits=bits)
+        assert {r.k for r in got.collect()} == want, f"num_bits={bits}"

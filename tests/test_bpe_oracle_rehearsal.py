@@ -1,16 +1,13 @@
-"""Oracle REHEARSAL for a planned bpe_apply registry query
-(tokenizer INFERENCE with a shipped/frozen rule table — the fit
-itself is pytest-proven, driver-side argmax, not SQL-replayable):
+"""``bpe_apply`` with the registry's frozen rule table against the
+``bpe_apply`` registry oracle at sf0.001, plus what the registry gate
+(tests/test_registry_oracles.py) does not check: that both rules —
+the self-pair rule included, which exercises greedy non-overlap on
+runs — actually fire on this corpus, so the oracle is not the identity
+tokenization.
 
-DuckDB replays the greedy left-to-right non-overlapping merge
-EXACTLY via literal ``replace()`` (which substitutes left-to-right
-non-overlapping) over a sentinel-wrapped encoding: each token is
-wrapped as ``§token§`` (§ = \\x1f, impossible in whitespace-split
-tokens), so the adjacent pair (a, b) is the literal substring
-``§a§§b§`` and one replace per rule IS the fold. Rules apply in rank
-order, later rules over earlier rules' outputs, matching
-``bpe_apply``. Output columns are engine-stable scalars (count +
-'|'-joined tokenization)."""
+The oracle replays the greedy left-to-right non-overlapping merge
+EXACTLY via literal ``replace()`` over a sentinel-wrapped encoding
+(``oracles._bpe_apply_sql``)."""
 
 from __future__ import annotations
 
@@ -18,54 +15,16 @@ import duckdb
 from pyspark.sql import functions as F
 
 from airbnb_cdc_spark.operators.bpe import bpe_apply
+from airbnb_cdc_spark.oracles import _BPE_APPLY_ORACLE, _BPE_RULES
 
 SF_DIR = "/root/testdata/sf0.001"
-SEP = "\x1f"
-
-# the frozen tokenizer: rules over pairs the driver corpus actually
-# contains (probed at sf0.001: ('order','fast') 51x, ('order','order')
-# 47x); the self-pair rule exercises greedy non-overlap on runs
-RULES = [(0, "order", "fast"), (1, "order", "order")]
-
-
-def _rules_with_merged():
-    return [(r, a, b, f"{a} {b}") for r, a, b in RULES]
-
-
-def rehearsal_sql() -> str:
-    wrapped = (
-        f"CASE WHEN length(t) = 0 THEN '' ELSE '{SEP}' || "
-        f"array_to_string(list_transform(t, x -> x), '{SEP}{SEP}') || '{SEP}' END"
-    )
-    expr = wrapped
-    for _, a, b, m in _rules_with_merged():
-        expr = (
-            f"replace({expr}, '{SEP}{a}{SEP}{SEP}{b}{SEP}', '{SEP}{m}{SEP}')"
-        )
-    return f"""
-WITH toks AS (
-    SELECT doc_id,
-           list_filter(regexp_split_to_array(lower(coalesce(text, '')), '\\s+'),
-                       x -> x <> '') AS t
-    FROM documents
-),
-merged AS (
-    SELECT doc_id, {expr} AS r FROM toks
-)
-SELECT doc_id,
-       CAST(CASE WHEN r = '' THEN 0
-            ELSE length(r) - length(replace(r, '{SEP}{SEP}', '{SEP}')) + 1
-            END AS BIGINT) AS n_bpe_tokens,
-       replace(trim(r, '{SEP}'), '{SEP}{SEP}', '|') AS bpe_text
-FROM merged
-"""
 
 
 def test_bpe_apply_matches_duckdb_rehearsal(spark):
     from airbnb_cdc_spark.session import load_table
 
     docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
-    applied = bpe_apply(docs, _rules_with_merged())
+    applied = bpe_apply(docs, [(r, a, b, f"{a} {b}") for r, a, b in _BPE_RULES])
     got = {
         r.doc_id: (r.n_bpe_tokens, r.bpe_text)
         for r in applied.select(
@@ -79,7 +38,7 @@ def test_bpe_apply_matches_duckdb_rehearsal(spark):
     con.execute(
         f"CREATE VIEW documents AS SELECT * FROM read_parquet('{SF_DIR}/documents.parquet')"
     )
-    want = {row[0]: (row[1], row[2]) for row in con.execute(rehearsal_sql()).fetchall()}
+    want = {row[0]: (row[1], row[2]) for row in con.execute(_BPE_APPLY_ORACLE).fetchall()}
     assert got == want
     # the frozen rules actually fire on this corpus (non-degenerate)
     assert any("order fast" in v[1] for v in got.values())

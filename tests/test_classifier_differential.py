@@ -1,8 +1,9 @@
 """Randomized Spark-vs-DuckDB differential for the quality
 classifier (the planned-r13 query, pre-proven on generated corpora):
 the exact-integer NB-ratio weights, BIGINT margins, and top-K cut
-must agree with the rehearsal SQL on random tiny corpora — empty
-texts, missing classes, all-tie margins, skewed class draws."""
+must agree with the ``quality_classifier_topk`` oracle on random tiny
+corpora — empty texts, missing classes, all-tie margins, skewed class
+draws."""
 
 from __future__ import annotations
 
@@ -18,12 +19,12 @@ from airbnb_cdc_spark.operators.classifier import (
     fit_quality_classifier,
     token_buckets,
 )
-from tests.test_classifier_oracle_rehearsal import (
-    K,
-    N_BUCKETS,
-    REHEARSAL_SQL,
-    SCALE,
-    TARGET,
+from airbnb_cdc_spark.oracles import (
+    _CLF_BUCKETS as N_BUCKETS,
+    _CLF_K as K,
+    _CLF_SCALE as SCALE,
+    _CLF_TARGET as TARGET,
+    _CLF_TOPK_ORACLE,
 )
 
 WORDS = ["agg", "row", "scan", "the", "a", "of", "and", "is", "to", "zz"]
@@ -81,6 +82,6 @@ def test_classifier_differential(spark, tmp_path_factory, rows):
     )
     d_rows = sorted(
         (r[0], r[1], r[2], _norm(r[3]), r[4])
-        for r in con.execute(REHEARSAL_SQL).fetchall()
+        for r in con.execute(_CLF_TOPK_ORACLE).fetchall()
     )
     assert s_rows == d_rows

@@ -1,72 +1,21 @@
-"""Oracle REHEARSAL for the planned-r14 content-defined chunk-dedup
-registry query: the exact DuckDB SQL that will become
-`content_chunk_dedup`'s oracle runs directly against the sf0.001
-parquet and is compared to the Spark operator row for row — the
-classifier/BPE/PQ registration pattern.
+"""``content_chunk_dedup`` against the ``content_chunk_dedup``
+registry oracle at sf0.001, plus what the registry gate
+(tests/test_registry_oracles.py) does not check: that duplicate spans
+exist at this SF, so the keeper/is_dup columns are exercised.
 
-Planned query shape: dedup.content_chunk_dedup(documents, divisor=16,
-rem=3) — Rabin-rule token boundaries (cut after tokens whose h60 % 16
-== 3), chunks hashed with md5 over the space-joined tokens, first
-(doc_id, chunk_idx) occurrence keeps each hash. Everything is md5 +
-integer arithmetic, so the replay is bit-exact."""
+Query shape: Rabin-rule token boundaries (cut after tokens whose
+h60 % 16 == 3), chunks hashed with md5 over the space-joined tokens,
+first (doc_id, chunk_idx) occurrence keeps each hash. Everything is
+md5 + integer arithmetic, so the replay is bit-exact."""
 
 from __future__ import annotations
 
 import duckdb
 
 from airbnb_cdc_spark.operators.dedup import content_chunk_dedup
+from airbnb_cdc_spark.oracles import _CC_DIVISOR, _CC_REM, _CONTENT_CHUNK_ORACLE
 
 SF_DIR = "/root/testdata/sf0.001"
-DIVISOR, REM = 16, 3
-
-# cut-position list is ascending, so the doc end dedups with a tail
-# check instead of list_distinct (whose ordering DuckDB does not
-# guarantee; Spark's array_distinct is order-preserving)
-REHEARSAL_SQL = f"""
-WITH toks AS (
-    SELECT doc_id,
-           list_filter(regexp_split_to_array(lower(coalesce(text, '')), '\\s+'),
-                       t -> t <> '') AS t
-    FROM documents
-),
-e AS (
-    SELECT doc_id, t,
-           CASE WHEN coalesce(cuts[-1], CAST(-1 AS BIGINT)) = len(t)
-                THEN cuts ELSE list_append(cuts, CAST(len(t) AS BIGINT)) END
-               AS ends
-    FROM (
-        SELECT doc_id, t,
-               list_filter(range(1, len(t) + 1),
-                   p -> CAST(('0x' || substring(md5(t[p]), 1, 15)) AS BIGINT)
-                        % {DIVISOR} = {REM}) AS cuts
-        FROM toks WHERE len(t) >= 1
-    )
-),
-chunks AS (
-    SELECT doc_id, CAST(k - 1 AS INT) AS chunk_idx,
-           CAST(len(ck) AS BIGINT) AS chunk_tokens,
-           md5(array_to_string(ck, ' ')) AS chunk_hash
-    FROM (
-        SELECT doc_id, k,
-               list_slice(t,
-                   CASE WHEN k = 1 THEN 1 ELSE ends[CAST(k - 1 AS INT)] + 1 END,
-                   ends[CAST(k AS INT)]) AS ck
-        FROM e, unnest(range(1, len(ends) + 1)) AS u(k)
-    )
-),
-kp AS (
-    SELECT chunk_hash, doc_id AS keep_doc_id, chunk_idx AS keep_chunk_idx
-    FROM (SELECT chunk_hash, doc_id, chunk_idx,
-                 row_number() OVER (PARTITION BY chunk_hash
-                                    ORDER BY doc_id, chunk_idx) AS rn
-          FROM chunks) WHERE rn = 1
-)
-SELECT c.doc_id, c.chunk_idx, c.chunk_tokens, c.chunk_hash,
-       kp.keep_doc_id, kp.keep_chunk_idx,
-       NOT (c.doc_id = kp.keep_doc_id AND c.chunk_idx = kp.keep_chunk_idx)
-           AS is_dup
-FROM chunks c JOIN kp USING (chunk_hash)
-"""
 
 
 def test_content_chunk_dedup_matches_duckdb_rehearsal(spark):
@@ -81,7 +30,9 @@ def test_content_chunk_dedup_matches_duckdb_rehearsal(spark):
             r.keep_chunk_idx,
             r.is_dup,
         )
-        for r in content_chunk_dedup(docs, divisor=DIVISOR, rem=REM).collect()
+        for r in content_chunk_dedup(
+            docs, divisor=_CC_DIVISOR, rem=_CC_REM
+        ).collect()
     }
 
     con = duckdb.connect()
@@ -91,7 +42,7 @@ def test_content_chunk_dedup_matches_duckdb_rehearsal(spark):
     )
     want = {
         (row[0], row[1]): (row[2], row[3], row[4], row[5], row[6])
-        for row in con.execute(REHEARSAL_SQL).fetchall()
+        for row in con.execute(_CONTENT_CHUNK_ORACLE).fetchall()
     }
     assert got == want  # bit-exact: md5 + integer boundaries only
     assert len(got) > 0

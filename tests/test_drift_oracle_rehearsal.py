@@ -1,16 +1,13 @@
-"""Oracle REHEARSAL for a future `corpus_drift` registry query (r15+
-stock, same pattern as the PQ/content-chunk rehearsals): the exact
-DuckDB SQL runs against the sf0.001 parquet and is compared to the
-planned Spark query shape value for value.
+"""``distribution_drift`` with the half split computed through a
+broadcast join (the registry query collects the cut as a literal
+instead) against the ``corpus_drift`` registry oracle at sf0.001, plus
+what the registry gate (tests/test_registry_oracles.py) does not
+check: that at least 10 buckets drift at this SF.
 
-Planned shape: half-split arrival convention (reference corpus =
-doc_id <= max/2, new snapshot = the rest — the incremental_dedup
-convention), hashed-unigram buckets (the DSIR convention, 512
-buckets), and the DENSE per-bucket drift table (bucket, ref_count,
-new_count, drift_num) where drift_num = |new*R - ref*N| — exact
-integers end to end; drift_num rides DECIMAL(38,0) in the operator
-and is cast to BIGINT here (bounded at driver SFs: counts x totals
-<< 2^63)."""
+Query shape: reference corpus = doc_id <= max/2, new snapshot = the
+rest; hashed-unigram buckets (the DSIR convention, 512 buckets); the
+DENSE per-bucket drift table (bucket, ref_count, new_count, drift_num)
+where drift_num = |new*R - ref*N| — exact integers end to end."""
 
 from __future__ import annotations
 
@@ -21,52 +18,9 @@ from airbnb_cdc_spark.operators.importance import (
     distribution_drift,
     token_buckets,
 )
+from airbnb_cdc_spark.oracles import _CORPUS_DRIFT_ORACLE, _DRIFT_B
 
 SF_DIR = "/root/testdata/sf0.001"
-B = 512
-
-REHEARSAL_SQL = f"""
-WITH cutoff AS (
-    SELECT CAST(MAX(doc_id) AS BIGINT) // 2 AS cut FROM documents
-),
-tok AS (
-    SELECT doc_id,
-           CAST(('0x' || substring(md5(u.tok), 1, 15)) AS BIGINT)
-               % {B} AS bucket
-    FROM (
-        SELECT doc_id,
-               list_filter(regexp_split_to_array(lower(coalesce(text, '')), '\\s+'),
-                           t -> t <> '') AS t
-        FROM documents
-    ), unnest(t) AS u(tok)
-),
-ref AS (
-    SELECT bucket, count(*) AS ref_count FROM tok, cutoff
-    WHERE doc_id <= cut GROUP BY bucket
-),
-nw AS (
-    SELECT bucket, count(*) AS new_count FROM tok, cutoff
-    WHERE doc_id > cut GROUP BY bucket
-),
-dense AS (
-    SELECT r.range AS bucket,
-           COALESCE(ref.ref_count, 0) AS ref_count,
-           COALESCE(nw.new_count, 0) AS new_count
-    FROM range({B}) r
-    LEFT JOIN ref ON ref.bucket = r.range
-    LEFT JOIN nw ON nw.bucket = r.range
-),
-tot AS (
-    SELECT CAST(SUM(ref_count) AS HUGEINT) AS R,
-           CAST(SUM(new_count) AS HUGEINT) AS N
-    FROM dense
-)
-SELECT bucket, CAST(ref_count AS BIGINT) AS ref_count,
-       CAST(new_count AS BIGINT) AS new_count,
-       CAST(ABS(CAST(new_count AS HUGEINT) * tot.R
-                - CAST(ref_count AS HUGEINT) * tot.N) AS BIGINT) AS drift_num
-FROM dense, tot
-"""
 
 
 def test_corpus_drift_matches_duckdb_rehearsal(spark):
@@ -78,7 +32,9 @@ def test_corpus_drift_matches_duckdb_rehearsal(spark):
     ref = with_cut.filter(F.col("doc_id") <= F.col("cut")).select("doc_id", "text")
     new = with_cut.filter(F.col("doc_id") > F.col("cut")).select("doc_id", "text")
     per = distribution_drift(
-        token_buckets(ref, "text", B), token_buckets(new, "text", B), B
+        token_buckets(ref, "text", _DRIFT_B),
+        token_buckets(new, "text", _DRIFT_B),
+        _DRIFT_B,
     ).select(
         "bucket",
         F.col("ref_count").cast("long").alias("ref_count"),
@@ -96,10 +52,10 @@ def test_corpus_drift_matches_duckdb_rehearsal(spark):
     )
     want = {
         row[0]: (row[1], row[2], row[3])
-        for row in con.execute(REHEARSAL_SQL).fetchall()
+        for row in con.execute(_CORPUS_DRIFT_ORACLE).fetchall()
     }
     assert got == want  # bit-exact integers
-    assert len(got) == B
+    assert len(got) == _DRIFT_B
     # non-degenerate at this SF: the halves are near-identical by
     # construction (31 buckets move at sf0.001), but the hash target
     # is the full 512-row table, so any bucket-level change flips it

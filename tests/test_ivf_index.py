@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import types as T
 
 from airbnb_cdc_spark.operators.similarity import (
+    _check_collected_dims,
     append_ivf_index,
     build_ivf_index,
     query_ivf_index,
@@ -42,6 +43,35 @@ def test_wrong_width_frame_fails_loud(spark, tmp_path):
         query_ivf_index(spark, path, wide, k=3)
     with pytest.raises(ValueError, match="components"):
         append_ivf_index(spark, path, wide)
+
+
+def test_null_query_vector_fails_with_value_error(spark, tmp_path):
+    """A NULL query vector collects a NULL (or legacy -1) size into the
+    probe-side width guard, which must raise its ValueError naming the
+    query, not a TypeError from comparing None with ints."""
+    path = str(tmp_path / "ivf")
+    build_ivf_index(
+        _vecs(spark, range(60)), path, centroid_mod=11, centroid_rem=3
+    )
+    queries = spark.createDataFrame([(0, [0.5] * 64), (1, None)], _SCHEMA)
+    with pytest.raises(ValueError, match=r"NULL for query_id \[1\]"):
+        query_ivf_index(spark, path, queries, k=3)
+    for null_size in (None, -1):
+        rows = [{"query_id": 0, "__d": 64}, {"query_id": 1, "__d": null_size}]
+        with pytest.raises(ValueError, match=r"NULL for query_id \[1\]"):
+            _check_collected_dims(rows, "__d", 64, "embedding")
+
+
+def test_empty_probe_set_skips_width_guard(spark, tmp_path):
+    """No probe rows (no queries, or a store with no lists) means no
+    collected width: the guard passes and the query answers empty."""
+    _check_collected_dims([], "__d", 64, "embedding")
+    path = str(tmp_path / "ivf")
+    build_ivf_index(
+        _vecs(spark, range(60)), path, centroid_mod=11, centroid_rem=3
+    )
+    none = spark.createDataFrame([], _SCHEMA)
+    assert query_ivf_index(spark, path, none, k=3).count() == 0
 
 
 def test_mixed_width_append_batch_fails_loud(spark, tmp_path):

@@ -1,16 +1,15 @@
-"""Oracle REHEARSAL for the planned-r14 PQ registry query: the exact
-DuckDB SQL that will become `ann_topk_pq`'s oracle runs here directly
-against the sf0.001 parquet and is compared to the Spark operator
-output value for value — so when the rotation opens a slot,
-registration is a move-the-SQL edit, not new verification work (the
-classifier/BPE r12→r13 pattern).
+"""The IN-MEMORY ``pq_refine_topk`` (codebook + encode + ADC shortlist
++ exact re-rank in one session) against the ``ann_topk_pq`` registry
+oracle at sf0.001. The registry query runs the persisted PQ store
+(``write_pq_index`` + ``query_pq_index_refined``) instead, so the
+registry gate (tests/test_registry_oracles.py) never calls this
+function; this also pins a full top-K for every query at this SF.
 
-Planned query shape: pq_refine_topk(embeddings, vec_id % 50 == 0,
-k=5, refine=10, m=16, dim=64, cb_mod=None→max(2, n//256), cb_rem=1) —
-ADC shortlist of 50 by exact-integer PQ score, exact quantized-cosine
-re-rank to 5. Every stage is integer or deterministic-double, and
-every tie (code argmin, shortlist cut, final rank) breaks on an id,
-so the replay is bit-exact."""
+Query shape: pq_refine_topk(embeddings, vec_id % 50 == 0, k=5,
+refine=10, m=16, dim=64, cb_mod=None→max(2, n//256), cb_rem=1) — ADC
+shortlist of 50 by exact-integer PQ score, exact quantized-cosine
+re-rank to 5. Every tie (code argmin, shortlist cut, final rank) breaks
+on an id, so the replay is bit-exact."""
 
 from __future__ import annotations
 
@@ -18,81 +17,14 @@ import duckdb
 from pyspark.sql import functions as F
 
 from airbnb_cdc_spark.operators.similarity import pq_refine_topk
+from airbnb_cdc_spark.oracles import (
+    _ANN_PQ_K,
+    _ANN_PQ_M,
+    _ANN_PQ_ORACLE,
+    _ANN_PQ_REFINE,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
-K, REFINE, M, DIM = 5, 10, 16, 64
-D = DIM // M  # 4-dim subvectors
-
-REHEARSAL_SQL = f"""
-WITH q AS (
-    SELECT vec_id,
-           list_transform(embedding,
-               x -> CAST(round(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS qe
-    FROM embeddings
-),
-params AS (
-    SELECT GREATEST(2, COUNT(*) // 256) AS cb_mod FROM embeddings
-),
-cb AS (
-    SELECT j.j AS j, q.vec_id AS cid,
-           list_transform(range(1, {D + 1}), i -> q.qe[j.j * {D} + i]) AS csub
-    FROM q, params, range(0, {M}) AS j(j)
-    WHERE q.vec_id % params.cb_mod = 1
-),
-subs AS (
-    SELECT q.vec_id, j.j AS j,
-           list_transform(range(1, {D + 1}), i -> q.qe[j.j * {D} + i]) AS xsub
-    FROM q, range(0, {M}) AS j(j)
-),
-codes AS (
-    SELECT vec_id, j, cid FROM (
-        SELECT s.vec_id, s.j, cb.cid,
-               ROW_NUMBER() OVER (
-                   PARTITION BY s.vec_id, s.j
-                   ORDER BY CAST(list_sum(list_transform(range(1, {D + 1}),
-                           i -> (s.xsub[i] - cb.csub[i])
-                                * (s.xsub[i] - cb.csub[i]))) AS BIGINT),
-                        cb.cid) AS rn
-        FROM subs s JOIN cb ON cb.j = s.j
-    ) WHERE rn = 1
-),
-lut AS (
-    SELECT a.vec_id AS query_id, cb.j, cb.cid,
-           CAST(list_sum(list_transform(range(1, {D + 1}),
-                   i -> a.qe[cb.j * {D} + i] * cb.csub[i])) AS BIGINT) AS pdot
-    FROM q a, cb
-    WHERE a.vec_id % 50 = 0
-),
-adc AS (
-    SELECT l.query_id, c.vec_id AS neighbor_id,
-           CAST(SUM(l.pdot) AS BIGINT) AS pq_score
-    FROM codes c JOIN lut l ON l.j = c.j AND l.cid = c.cid
-    WHERE l.query_id <> c.vec_id
-    GROUP BY l.query_id, c.vec_id
-),
-shortlist AS (
-    SELECT query_id, neighbor_id FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                     ORDER BY pq_score DESC, neighbor_id) AS rn
-        FROM adc
-    ) WHERE rn <= {REFINE * K}
-),
-rer AS (
-    SELECT s.query_id, s.neighbor_id,
-           CAST(list_sum(list_transform(range(1, 65), i -> a.qe[i] * b.qe[i])) AS DOUBLE)
-           / (sqrt(CAST(list_sum(list_transform(range(1, 65), i -> a.qe[i] * a.qe[i])) AS DOUBLE))
-              * sqrt(CAST(list_sum(list_transform(range(1, 65), i -> b.qe[i] * b.qe[i])) AS DOUBLE)))
-               AS cosine
-    FROM shortlist s
-    JOIN q a ON a.vec_id = s.query_id
-    JOIN q b ON b.vec_id = s.neighbor_id
-)
-SELECT query_id, neighbor_id, cosine, CAST(rank AS INTEGER) AS rank FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                 ORDER BY cosine DESC, neighbor_id) AS rank
-    FROM rer
-) WHERE rank <= {K}
-"""
 
 
 def test_pq_refine_matches_duckdb_rehearsal(spark):
@@ -102,7 +34,9 @@ def test_pq_refine_matches_duckdb_rehearsal(spark):
     queries = emb.filter(F.col("vec_id") % 50 == 0)
     got = {
         (r.query_id, r.rank): (r.neighbor_id, r.cosine)
-        for r in pq_refine_topk(emb, queries, k=K, refine=REFINE, m=M).collect()
+        for r in pq_refine_topk(
+            emb, queries, k=_ANN_PQ_K, refine=_ANN_PQ_REFINE, m=_ANN_PQ_M
+        ).collect()
     }
 
     con = duckdb.connect()
@@ -112,9 +46,9 @@ def test_pq_refine_matches_duckdb_rehearsal(spark):
     )
     want = {
         (row[0], row[3]): (row[1], row[2])
-        for row in con.execute(REHEARSAL_SQL).fetchall()
+        for row in con.execute(_ANN_PQ_ORACLE).fetchall()
     }
     assert got == want  # bit-exact: integer ADC, deterministic doubles
     # non-degenerate: every query yields a full top-K at this SF
     n_queries = queries.count()
-    assert len(got) == n_queries * K
+    assert len(got) == n_queries * _ANN_PQ_K

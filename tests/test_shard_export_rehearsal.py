@@ -1,16 +1,15 @@
-"""Oracle REHEARSAL for a future `shard_pack_export` registry query
-(r16+ stock, the PQ/content-chunk/drift/ivf-pq registration pattern):
-the complete training-export tail — deterministic shuffle-shard
-(`shard_assign`, seeded 60-bit md5 hash, shard = h % n, within-shard
-order (h, key)) composed with offset-based greedy packing
-(`pack_sequences`, budget 512) — compared value for value against the
-exact DuckDB SQL at sf0.001.
+"""``shard_assign`` + ``pack_sequences`` with ``shard_pos`` JOINED BACK
+from the sharded frame (the registry query carries it through the
+packing select with ``keep_order_col=True`` instead) against the
+``shard_pack_export`` registry oracle at sf0.001, plus what the
+registry gate (tests/test_registry_oracles.py) does not check: every
+shard is populated, none holds more than half the corpus, and another
+seed yields another permutation.
 
-This is the step a pretraining pipeline runs LAST: after filtering /
-dedup / mixture, the corpus is pseudo-randomly sharded (no rand(), no
-global sort — one hash shuffle + per-shard windows) and packed into
-fixed-token-budget sequences per shard. Everything is integer
-arithmetic over md5 prefixes, so the replay is bit-exact."""
+Query shape: deterministic shuffle-shard (seeded 60-bit md5 hash,
+shard = h % n, within-shard order (h, key)) composed with offset-based
+greedy packing (budget 512). Everything is integer arithmetic over md5
+prefixes, so the replay is bit-exact."""
 
 from __future__ import annotations
 
@@ -18,36 +17,14 @@ import duckdb
 from pyspark.sql import functions as F
 
 from airbnb_cdc_spark.operators.sampling import pack_sequences, shard_assign
+from airbnb_cdc_spark.queries import (
+    _SHARD_BUDGET,
+    _SHARD_N,
+    _SHARD_PACK_ORACLE,
+    _SHARD_SEED,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
-N_SHARDS = 8
-SEED = "r16"
-BUDGET = 512
-
-REHEARSAL_SQL = f"""
-WITH t AS (
-    SELECT doc_id,
-           CAST(('0x' || substring(md5(concat_ws(':', '{SEED}',
-                    CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT) AS h,
-           CAST(len(list_filter(regexp_split_to_array(lower(coalesce(text, '')), '\\s+'),
-                    tk -> tk <> '')) AS BIGINT) AS n_tokens
-    FROM documents
-    WHERE doc_id IS NOT NULL
-),
-s AS (
-    SELECT doc_id, n_tokens,
-           CAST(h % {N_SHARDS} AS INT) AS shard,
-           CAST(ROW_NUMBER() OVER (PARTITION BY h % {N_SHARDS}
-                                   ORDER BY h, doc_id) AS BIGINT) AS shard_pos
-    FROM t
-)
-SELECT doc_id, shard, shard_pos, n_tokens,
-       CAST(SUM(n_tokens) OVER w - n_tokens AS BIGINT) AS token_offset,
-       CAST((SUM(n_tokens) OVER w - n_tokens) // {BUDGET} AS BIGINT) AS seq_id
-FROM s
-WINDOW w AS (PARTITION BY shard ORDER BY shard_pos
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-"""
 
 
 def test_shard_pack_export_matches_duckdb_rehearsal(spark):
@@ -56,10 +33,10 @@ def test_shard_pack_export_matches_duckdb_rehearsal(spark):
 
     docs = load_table(spark, SF_DIR, "documents")
     sharded = shard_assign(
-        docs.select("doc_id", "text"), "doc_id", N_SHARDS, seed=SEED
+        docs.select("doc_id", "text"), "doc_id", _SHARD_N, seed=_SHARD_SEED
     )
     packed = pack_sequences(
-        sharded, "shard", "shard_pos", token_count(F.col("text")), BUDGET
+        sharded, "shard", "shard_pos", token_count(F.col("text")), _SHARD_BUDGET
     )
     # pack_sequences keeps (id, shard, n_tokens, token_offset, seq_id);
     # join shard_pos back from the sharded frame for the full contract
@@ -80,7 +57,7 @@ def test_shard_pack_export_matches_duckdb_rehearsal(spark):
     )
     want = {
         row[0]: tuple(row[1:])
-        for row in con.execute(REHEARSAL_SQL).fetchall()
+        for row in con.execute(_SHARD_PACK_ORACLE).fetchall()
     }
     assert got == want  # bit-exact integers end to end
     assert len(got) > 0
@@ -89,11 +66,11 @@ def test_shard_pack_export_matches_duckdb_rehearsal(spark):
     from collections import Counter
 
     per_shard = Counter(v[0] for v in got.values())
-    assert len(per_shard) == N_SHARDS
+    assert len(per_shard) == _SHARD_N
     assert max(per_shard.values()) <= len(got) / 2
     # a different seed yields a different permutation (same corpus)
     resharded = shard_assign(
-        docs.select("doc_id", "text"), "doc_id", N_SHARDS, seed="other"
+        docs.select("doc_id", "text"), "doc_id", _SHARD_N, seed="other"
     )
     got2 = {
         r.doc_id: (r.shard, r.shard_pos)
